@@ -24,8 +24,8 @@ idiomatic Spark DataFrame operators:
   analog: pickle-per-row state + config-as-checkpoint
   (htm_stream.py:135-155)
 
-All compute is DataFrame/SQL expressions (whole-stage codegen) with
-vectorized Arrow pandas UDFs only where expressions cannot reach.
+All compute is DataFrame/SQL expressions (whole-stage codegen) plus one
+fused ``mapInArrow`` kernel that decodes the token arrays once.
 """
 
 __version__ = "0.1.0"

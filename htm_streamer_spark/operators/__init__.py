@@ -7,22 +7,20 @@ from htm_streamer_spark.operators.referential import referential_violations
 from htm_streamer_spark.operators.stats import partition_stats
 from htm_streamer_spark.operators.uniqueness import duplicate_ids, duplicate_violations
 from htm_streamer_spark.operators.drift import (
+    featurize_and_token_histogram,
     ntok_histogram,
-    token_histogram,
-    token_histogram_checked,
     drift_scores,
 )
 
 __all__ = [
     "featurize",
+    "featurize_and_token_histogram",
     "row_check_flags",
     "row_violations",
-    "token_histogram_checked",
     "partition_stats",
     "duplicate_ids",
     "duplicate_violations",
     "referential_violations",
-    "token_histogram",
     "ntok_histogram",
     "drift_scores",
 ]

@@ -5,11 +5,13 @@ fit + tail probability, /root/reference/htm_streamer/data/
 anomalylikelihood.py:424-467,718-788) with distribution distances computed
 per partition against a checkpointed baseline:
 
-- token-frequency histogram: explode each row's token-bucket ids and
-  count — Spark's map-side partial aggregation collapses the exploded
-  stream to ``n_partitions × n_buckets`` rows before the shuffle, so the
-  shuffle moves histograms, not tokens.
-- n_tok histogram: one bucket per row, same shape.
+- token-frequency histogram: the fused Arrow kernel
+  (functions/array_funcs.py:featurize_hist_kernel) bincounts each
+  batch's clean-row token buckets, so each batch emits at most
+  ``n_partitions × n_buckets`` rows and the shuffle moves histograms,
+  not tokens.
+- n_tok histogram: one bucket per clean row of the kernel's narrow
+  frame, same shape.
 - PSI / KL with probability floors — the flooring mirrors the reference's
   mean/variance floors (anomalylikelihood.py:733-742).
 
@@ -26,69 +28,16 @@ from pyspark.sql import functions as F
 
 from htm_streamer_spark.config import HIST_EPS, NTOK_MAX, EngineConfig
 from htm_streamer_spark.functions.array_funcs import (
-    checked_token_hist_kernel,
+    featurize_hist_kernel,
     ntok_bucket_expr,
-    token_bucket_expr,
-    token_hist_kernel,
 )
 
 
-def token_histogram(df: DataFrame, cfg: EngineConfig, impl: str = "arrow") -> DataFrame:
-    """Per-partition token-bucket histogram: (part_id, bucket, cnt).
-
-    ``impl='arrow'`` (default): mapInArrow pre-aggregation over the
-    zero-copy ListArray buffers — each Arrow batch emits at most
-    n_parts×buckets rows, bounding executor→shuffle traffic independent
-    of tokens-per-row, and numpy bincount replaces 280M exploded rows
-    through codegen (measured ~15x at sf0.1). The 100 TB path; also the
-    north star's histogram-of-arrays Arrow UDF.
-    ``impl='native'``: transform tokens→buckets then explode + count
-    (codegen, partial agg) — kept as the pure-JVM fallback and as the
-    cross-check in tests.
-    """
-    if impl == "arrow":
-        hist = df.select("part_id", "tokens").mapInArrow(
-            token_hist_kernel(cfg.tok_hist_buckets, cfg.vocab_size),
-            schema="part_id int, bucket int, cnt long",
-        )
-        return hist.groupBy("part_id", "bucket").agg(F.sum("cnt").alias("cnt"))
-    bucketed = df.select(
-        "part_id",
-        F.explode(
-            F.transform(
-                F.col("tokens"),
-                lambda t: token_bucket_expr(t, cfg.tok_hist_buckets, cfg.vocab_size),
-            )
-        ).alias("bucket"),
-    )
-    return bucketed.groupBy("part_id", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def token_histogram_checked(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Token-bucket histogram over CLEAN rows only, with the row checks
-    fused into the Arrow kernel (no separate flag pass over tokens).
-    Input: the raw sequences frame. Output: (part_id, bucket, cnt)."""
-    hist = df.select("part_id", "tokens", "n_tok", "source").mapInArrow(
-        checked_token_hist_kernel(
-            cfg.tok_hist_buckets, cfg.vocab_size, cfg.allowed_sources, cfg.checks
-        ),
-        schema="part_id int, bucket int, cnt long",
-    )
-    return hist.groupBy("part_id", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
-def featurize_and_token_histogram(
-    df: DataFrame, cfg: EngineConfig
-) -> tuple[DataFrame, DataFrame]:
-    """ONE pass over the token bytes producing both the narrow per-row
-    feature frame and the per-partition clean-row token histogram (see
-    functions/array_funcs.py:featurize_hist_kernel). Returns
-    (narrow_df, tok_hist_df). The caller persists the combined output;
-    both returned frames are filters over it, so the token column is
-    decoded exactly once per suite run."""
-    from htm_streamer_spark.functions.array_funcs import featurize_hist_kernel
-
-    out = df.select("doc_id", "part_id", "n_tok", "source", "ts", "tokens").mapInArrow(
+def _featurize_hist(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """The fused kernel's combined output, not persisted: ``kind=0``
+    narrow feature rows and ``kind=1`` clean-row histogram rows (see
+    functions/array_funcs.py:featurize_hist_kernel)."""
+    return df.select("doc_id", "part_id", "n_tok", "source", "ts", "tokens").mapInArrow(
         featurize_hist_kernel(
             cfg.tok_hist_buckets, cfg.vocab_size, cfg.allowed_sources, cfg.checks
         ),
@@ -96,7 +45,12 @@ def featurize_and_token_histogram(
             "kind tinyint, doc_id string, part_id int, n_tok int, source string, "
             "ts timestamp, tok_len int, tok_oob boolean, bucket int, cnt long"
         ),
-    ).persist()
+    )
+
+
+def _split_featurize_hist(out: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(narrow_df, tok_hist_df) as filters over the kernel output ``out``;
+    the histogram is per partition: (part_id, bucket, cnt)."""
     narrow = out.filter(F.col("kind") == 0).select(
         "doc_id", "part_id", "n_tok", "source", "ts", "tok_len", "tok_oob"
     )
@@ -106,6 +60,19 @@ def featurize_and_token_histogram(
         .agg(F.sum("cnt").alias("cnt"))
     )
     return narrow, hist
+
+
+def featurize_and_token_histogram(
+    df: DataFrame, cfg: EngineConfig
+) -> tuple[DataFrame, DataFrame]:
+    """ONE pass over the token bytes producing both the narrow per-row
+    feature frame and the per-partition clean-row token histogram.
+    Returns (narrow_df, tok_hist_df). The combined kernel output is
+    persisted before return and both frames are filters over it, so the
+    token column is decoded exactly once however many consumers read
+    them. Unpersisting a returned frame releases nothing (it is not the
+    cached frame); ``spark.catalog.clearCache()`` does."""
+    return _split_featurize_hist(_featurize_hist(df, cfg).persist())
 
 
 def ntok_histogram(df: DataFrame, cfg: EngineConfig) -> DataFrame:

@@ -24,10 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from htm_streamer_spark.config import EngineConfig
-from htm_streamer_spark.functions.array_funcs import (
-    len_mismatch_expr,
-    token_oob_expr,
-)
+from htm_streamer_spark.functions.array_funcs import token_oob_expr
 
 ROW_CHECK_ORDER = ("null_n_tok", "len_mismatch", "token_range", "empty_tokens", "bad_source")
 

@@ -16,25 +16,23 @@ config.py:199-225 and pipeline/htm_stream.py:76-147):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from htm_streamer_spark.config import EngineConfig, validate_input_schema
 from htm_streamer_spark.operators.drift import (
+    _featurize_hist,
+    _split_featurize_hist,
     drift_scores,
-    featurize_and_token_histogram,
     ntok_histogram,
-    token_histogram,
-    token_histogram_checked,
 )
 from htm_streamer_spark.operators.invariants import (
     featurize,
     row_check_flags,
     row_violations,
 )
-from htm_streamer_spark.operators.referential import dim_sources_df
 from htm_streamer_spark.operators.stats import partition_stats
 from htm_streamer_spark.operators.uniqueness import duplicate_violations
 
@@ -44,6 +42,16 @@ class ValidationResult:
     verdicts: DataFrame    # part_id, verdict, n_violations, psi, kl
     violations: DataFrame  # doc_id, part_id, check_id, payload
     stats: DataFrame       # per-partition fused stats
+    _cached: tuple[DataFrame, ...] = field(
+        default=(), init=False, repr=False, compare=False
+    )
+
+    def unpersist(self) -> None:
+        """Release the frames ``run_validation_batch`` cached (the
+        featurized frame and the violation rows). The result frames stay
+        valid; reading them again recomputes from the input."""
+        for frame in self._cached:
+            frame.unpersist()
 
 
 def load_sequences(spark: SparkSession, path: str) -> DataFrame:
@@ -63,25 +71,52 @@ def baseline_part_ids(df: DataFrame, cfg: EngineConfig) -> list[int]:
     return [r[0] for r in rows]
 
 
+def _drift_hists(
+    narrow: DataFrame, tok_hist: DataFrame, cfg: EngineConfig, base_parts: list[int]
+) -> tuple[dict[str, DataFrame], dict]:
+    """Clean-row histograms from the fused kernel's (narrow, hist) frames:
+    the per-partition {'tok', 'ntok'} frames (part_id, bucket, cnt), and
+    the baseline — their sums over ``base_parts`` as
+    {'tok': DF(bucket,cnt), 'ntok': DF(bucket,cnt), 'part_ids': list}."""
+    clean = row_check_flags(narrow, cfg, featurized=True).filter(
+        ~F.col("any_violation")
+    )
+    per_part = {"tok": tok_hist, "ntok": ntok_histogram(clean, cfg)}
+    baseline = {
+        k: h.filter(F.col("part_id").isin(base_parts))
+        .groupBy("bucket")
+        .agg(F.sum("cnt").alias("cnt"))
+        for k, h in per_part.items()
+    }
+    baseline["part_ids"] = base_parts
+    return per_part, baseline
+
+
 def compute_baseline(
     df: DataFrame, cfg: EngineConfig, base_parts: list[int] | None = None
 ) -> dict[str, DataFrame]:
     """Baseline token + n_tok histograms over clean rows of the baseline
     partitions. Returns {'tok': DF(bucket,cnt), 'ntok': DF(bucket,cnt),
-    'part_ids': list}."""
+    'part_ids': list}.
+
+    The fused kernel runs once over the baseline partitions; the two
+    histograms (at most ``tok_hist_buckets + ntok_hist_buckets`` rows)
+    come back as local frames, so no consumer runs the kernel again and
+    nothing stays cached."""
     if base_parts is None:
         base_parts = baseline_part_ids(df, cfg)
-    sub = df.filter(F.col("part_id").isin(base_parts))
-    tok = (
-        token_histogram_checked(sub, cfg)
-        .groupBy("bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    clean = row_check_flags(featurize(sub, cfg), cfg, featurized=True).filter(
-        ~F.col("any_violation")
-    )
-    ntok = ntok_histogram(clean, cfg).groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
-    return {"tok": tok, "ntok": ntok, "part_ids": base_parts}
+    out = _featurize_hist(df.filter(F.col("part_id").isin(base_parts)), cfg).persist()
+    try:
+        _, lazy = _drift_hists(*_split_featurize_hist(out), cfg, base_parts)
+        spark = df.sparkSession
+        baseline = {
+            k: spark.createDataFrame(lazy[k].collect(), "bucket int, cnt long")
+            for k in ("tok", "ntok")
+        }
+    finally:
+        out.unpersist()
+    baseline["part_ids"] = base_parts
+    return baseline
 
 
 def all_violations(
@@ -112,8 +147,6 @@ def run_validation_batch(
     df: DataFrame,
     cfg: EngineConfig | None = None,
     baseline: dict[str, DataFrame] | None = None,
-    persist: bool = True,
-    fused: bool = True,
 ) -> ValidationResult:
     """Full-suite batch validation of ``df`` (the input_hint schema).
 
@@ -121,28 +154,24 @@ def run_validation_batch(
     ``cfg.baseline_partitions`` partitions of ``df`` itself (those
     partitions receive verdict ``probation`` unless they contain
     violations — the hard-fail override).
+
+    Two frames are cached: the featurized frame and the violation rows.
+    Call :meth:`ValidationResult.unpersist` once the result is consumed.
     """
     cfg = cfg or EngineConfig()
-    # ONE pass over the token bytes: a fused Arrow kernel emits both the
+    # ONE pass over the token bytes: the fused Arrow kernel emits both the
     # narrow per-row feature frame (size + range check) and the
     # clean-row token histogram; everything downstream runs on the
     # ~1%-size result. Caching the wide frame (tokens are ~99% of the
     # bytes) was the measured bottleneck — at 10^12 rows it is
-    # impossible.
+    # impossible. Without the drift check no histogram is needed, and
+    # the native featurize projection does the one decode.
     drift_enabled = "drift" in cfg.checks
-    tok_all = None
-    if drift_enabled and fused:
-        # one token decode total; narrow rows ride the Arrow IPC
-        narrow, tok_all = featurize_and_token_histogram(df, cfg)
+    if drift_enabled:
+        featurized = _featurize_hist(df, cfg).persist()
+        narrow, tok_all = _split_featurize_hist(featurized)
     else:
-        # two token decodes (JVM featurize + Arrow histogram kernel);
-        # no per-row IPC — wins when rows are many and tokens short
-        narrow = featurize(df, cfg)
-        if persist:
-            narrow = narrow.persist()
-        if drift_enabled:
-            tok_all = token_histogram_checked(df, cfg).persist()
-    base_parts: list[int]
+        featurized = narrow = featurize(df, cfg).persist()
     fit_from_self = baseline is None
     if fit_from_self:
         base_parts = baseline_part_ids(narrow, cfg)
@@ -156,35 +185,20 @@ def run_validation_batch(
     stats = partition_stats(narrow, cfg, featurized=True)
 
     if drift_enabled:
-        clean = row_check_flags(narrow, cfg, featurized=True).filter(
-            ~F.col("any_violation")
-        )
-        ntok_all = ntok_histogram(clean, cfg)
+        per_part, self_baseline = _drift_hists(narrow, tok_all, cfg, base_parts)
         if fit_from_self:
-            # the baseline is a tiny post-aggregation of the same
-            # per-partition histograms the fused kernel already produced
-            baseline = {
-                "tok": tok_all.filter(F.col("part_id").isin(base_parts))
-                .groupBy("bucket")
-                .agg(F.sum("cnt").alias("cnt")),
-                "ntok": ntok_all.filter(F.col("part_id").isin(base_parts))
-                .groupBy("bucket")
-                .agg(F.sum("cnt").alias("cnt")),
-                "part_ids": base_parts,
-            }
-        tok_nonbase = (
-            tok_all.filter(~F.col("part_id").isin(base_parts)) if base_parts else tok_all
-        )
-        ntok_nonbase = (
-            ntok_all.filter(~F.col("part_id").isin(base_parts)) if base_parts else ntok_all
-        )
-        tok_scores = drift_scores(
-            tok_nonbase, baseline["tok"], cfg.tok_hist_buckets
-        ).withColumnsRenamed({"psi": "psi_tok", "kl": "kl_tok"})
-        ntok_scores = drift_scores(
-            ntok_nonbase, baseline["ntok"], cfg.ntok_hist_buckets
-        ).withColumnsRenamed({"psi": "psi_ntok", "kl": "kl_ntok"})
-        drift = tok_scores.join(ntok_scores, "part_id", "outer").select(
+            baseline = self_baseline
+        scores = []
+        for k, n_buckets in (("tok", cfg.tok_hist_buckets), ("ntok", cfg.ntok_hist_buckets)):
+            part_hist = per_part[k]
+            if base_parts:
+                part_hist = part_hist.filter(~F.col("part_id").isin(base_parts))
+            scores.append(
+                drift_scores(part_hist, baseline[k], n_buckets).withColumnsRenamed(
+                    {"psi": f"psi_{k}", "kl": f"kl_{k}"}
+                )
+            )
+        drift = scores[0].join(scores[1], "part_id", "outer").select(
             "part_id",
             F.greatest(F.coalesce("psi_tok", F.lit(0.0)), F.coalesce("psi_ntok", F.lit(0.0))).alias("psi"),
             F.greatest(F.coalesce("kl_tok", F.lit(0.0)), F.coalesce("kl_ntok", F.lit(0.0))).alias("kl"),
@@ -203,7 +217,6 @@ def run_validation_batch(
     nv = F.coalesce(F.col("n_violations"), F.lit(0)).alias("n_violations")
     psi = F.when(is_base, F.lit(0.0)).otherwise(F.coalesce(F.col("psi"), F.lit(0.0)))
     kl = F.when(is_base, F.lit(0.0)).otherwise(F.coalesce(F.col("kl"), F.lit(0.0)))
-    drift_enabled = "drift" in cfg.checks
     verdict = (
         F.when(nv > 0, F.lit("fail"))
         .when(is_base, F.lit("probation"))
@@ -221,4 +234,6 @@ def run_validation_batch(
         psi.alias("psi"),
         kl.alias("kl"),
     )
-    return ValidationResult(verdicts=verdicts, violations=viols, stats=stats)
+    result = ValidationResult(verdicts=verdicts, violations=viols, stats=stats)
+    result._cached = (featurized, viols)
+    return result

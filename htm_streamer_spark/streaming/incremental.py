@@ -154,38 +154,44 @@ def run_incremental(
         checkpoint.stage_spark(BASELINE_NTOK, baseline["ntok"])
 
     result = run_validation_batch(spark, batch, cfg, baseline=baseline)
-    verdicts = result.verdicts
-    # listing-based discovery surfaces partition dirs with zero rows;
-    # without an explicit verdict they would re-enter todo on every run
-    # and the engine would never reach noop. Detect them with a
-    # column-pruned scan (hive column only — footer metadata, no token
-    # bytes) and commit status 'empty'.
-    nonempty = {r[0] for r in batch.select("part_id").distinct().collect()}
-    empty_parts = [p for p in todo if p not in nonempty]
-    if empty_parts:
-        verdicts = verdicts.unionByName(
-            spark.createDataFrame(
-                [(p, "empty", 0, 0.0, 0.0) for p in empty_parts],
-                "part_id int, verdict string, n_violations long, psi double, kl double",
+    try:
+        verdicts = result.verdicts
+        # listing-based discovery surfaces partition dirs with zero rows;
+        # without an explicit verdict they would re-enter todo on every run
+        # and the engine would never reach noop. Detect them with a
+        # column-pruned scan (hive column only — footer metadata, no token
+        # bytes) and commit status 'empty'.
+        nonempty = {r[0] for r in batch.select("part_id").distinct().collect()}
+        empty_parts = [p for p in todo if p not in nonempty]
+        if empty_parts:
+            verdicts = verdicts.unionByName(
+                spark.createDataFrame(
+                    [(p, "empty", 0, 0.0, 0.0) for p in empty_parts],
+                    "part_id int, verdict string, n_violations long, psi double, kl double",
+                )
             )
-        )
 
-    now = time.time()
-    verdict_rows = verdicts.select(
-        F.lit(run_id).alias("run_id"),
-        "part_id",
-        F.col("verdict").alias("status"),
-        F.to_json(
-            F.struct("n_violations", "psi", "kl")
-        ).alias("metrics"),
-        F.lit(now).alias("committed_at"),
-    )
-    checkpoint.stage_spark(VIOLATIONS_TABLE, result.violations.withColumn("run_id", F.lit(run_id)))
-    checkpoint.stage_spark(VERDICTS_TABLE, verdict_rows)
-    props = {}
-    if mode != "running":
-        props["baseline_part_ids"] = json.dumps(baseline["part_ids"])
-    version = checkpoint.commit(props)
+        now = time.time()
+        verdict_rows = verdicts.select(
+            F.lit(run_id).alias("run_id"),
+            "part_id",
+            F.col("verdict").alias("status"),
+            F.to_json(
+                F.struct("n_violations", "psi", "kl")
+            ).alias("metrics"),
+            F.lit(now).alias("committed_at"),
+        )
+        checkpoint.stage_spark(VIOLATIONS_TABLE, result.violations.withColumn("run_id", F.lit(run_id)))
+        checkpoint.stage_spark(VERDICTS_TABLE, verdict_rows)
+        props = {}
+        if mode != "running":
+            props["baseline_part_ids"] = json.dumps(baseline["part_ids"])
+        version = checkpoint.commit(props)
+    finally:
+        # after the commit has written every staged frame: a session
+        # that drains a table call by call must not keep past batches
+        # cached
+        result.unpersist()
     return {
         "run_id": run_id,
         "validated": todo,

@@ -204,30 +204,35 @@ def validate_stream(
         run_id = f"stream-epoch-{epoch_id}"
         batch = full.filter(F.col("part_id").isin(complete))
         result = run_validation_batch(spark, batch, cfg, baseline=baseline)
-        verdicts = result.verdicts
-        nonempty = {r[0] for r in batch.select("part_id").distinct().collect()}
-        empty_parts = [p for p in complete if p not in nonempty]
-        if empty_parts:
-            verdicts = verdicts.unionByName(
-                spark.createDataFrame(
-                    [(p, "empty", 0, 0.0, 0.0) for p in empty_parts],
-                    "part_id int, verdict string, n_violations long, psi double, kl double",
+        try:
+            verdicts = result.verdicts
+            nonempty = {r[0] for r in batch.select("part_id").distinct().collect()}
+            empty_parts = [p for p in complete if p not in nonempty]
+            if empty_parts:
+                verdicts = verdicts.unionByName(
+                    spark.createDataFrame(
+                        [(p, "empty", 0, 0.0, 0.0) for p in empty_parts],
+                        "part_id int, verdict string, n_violations long, psi double, kl double",
+                    )
                 )
+            catalog.stage_spark(
+                VIOLATIONS_TABLE, result.violations.withColumn("run_id", F.lit(run_id))
             )
-        catalog.stage_spark(
-            VIOLATIONS_TABLE, result.violations.withColumn("run_id", F.lit(run_id))
-        )
-        catalog.stage_spark(
-            VERDICTS_TABLE,
-            verdicts.select(
-                F.lit(run_id).alias("run_id"),
-                "part_id",
-                F.col("verdict").alias("status"),
-                F.to_json(F.struct("n_violations", "psi", "kl")).alias("metrics"),
-                F.lit(float(epoch_id)).alias("committed_at"),
-            ),
-        )
-        catalog.commit(props)
+            catalog.stage_spark(
+                VERDICTS_TABLE,
+                verdicts.select(
+                    F.lit(run_id).alias("run_id"),
+                    "part_id",
+                    F.col("verdict").alias("status"),
+                    F.to_json(F.struct("n_violations", "psi", "kl")).alias("metrics"),
+                    F.lit(float(epoch_id)).alias("committed_at"),
+                ),
+            )
+            catalog.commit(props)
+        finally:
+            # after the commit: a long-running query must not keep
+            # every past batch cached
+            result.unpersist()
 
     stream = read_sequences_stream(spark, path, max_files_per_trigger)
     writer = stream.writeStream.foreachBatch(process_batch).outputMode("update")

@@ -1,4 +1,5 @@
-"""Fused Arrow kernels must honor cfg.checks and null-token semantics.
+"""The fused Arrow kernel, and the baseline fitted over it, must honor
+cfg.checks and null-token semantics.
 
 Regression tests for two divergences: (1) the fused clean mask used to
 hard-code all five row checks while the native path honored cfg.checks,
@@ -9,18 +10,17 @@ len_mismatch/empty) while native F.size(NULL) is NULL.
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from htm_streamer_spark.config import SEQUENCES_SCHEMA, EngineConfig
 from htm_streamer_spark.operators.drift import (
     featurize_and_token_histogram,
-    token_histogram_checked,
+    ntok_histogram,
 )
 from htm_streamer_spark.operators.invariants import featurize, row_check_flags
 from htm_streamer_spark.functions.array_funcs import token_bucket_expr
+from htm_streamer_spark.plans.validation_plan import compute_baseline
 
 
 @pytest.fixture(scope="module")
@@ -35,15 +35,19 @@ def messy(spark):
         ("d5", [8, 9], None, "web", None, 1),          # null_n_tok
         ("d6", None, 2, "web", None, 1),               # null tokens
         ("d7", [10, 11, 12, 13], 4, "books", None, 1), # clean
+        ("d8", [14, 15], 2, "web", None, 2),           # clean, not baseline
     ]
     return spark.createDataFrame(rows, schema=SEQUENCES_SCHEMA)
 
 
+def _native_clean(df, cfg):
+    return row_check_flags(df, cfg).filter(~F.col("any_violation"))
+
+
 def _native_clean_hist(df, cfg):
     """The non-fused reference: native flags -> filter -> explode/count."""
-    clean = row_check_flags(df, cfg).filter(~F.col("any_violation"))
     return (
-        clean.select(
+        _native_clean(df, cfg).select(
             "part_id",
             F.explode(
                 F.transform(
@@ -72,10 +76,23 @@ CHECK_SETS = [
 
 @pytest.mark.parametrize("checks", CHECK_SETS, ids=["all", "len", "range+src", "empty", "null+src"])
 def test_checked_hist_matches_native_per_checkset(spark, messy, checks):
+    """compute_baseline's clean-row tok and ntok histograms equal the
+    native references summed over the baseline partitions."""
     cfg = EngineConfig(checks=checks)
-    fused = token_histogram_checked(messy, cfg)
-    native = _native_clean_hist(messy, cfg)
-    assert _collect(fused) == _collect(native)
+    base_parts = [0, 1]
+    base = compute_baseline(messy, cfg, base_parts)
+    assert base["part_ids"] == base_parts
+    native = {
+        "tok": _native_clean_hist(messy, cfg),
+        "ntok": ntok_histogram(_native_clean(messy, cfg), cfg),
+    }
+    for k, hist in native.items():
+        want = (
+            hist.filter(F.col("part_id").isin(base_parts))
+            .groupBy("bucket")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+        assert _collect(base[k]) == _collect(want), k
 
 
 @pytest.mark.parametrize("checks", CHECK_SETS, ids=["all", "len", "range+src", "empty", "null+src"])
@@ -84,7 +101,8 @@ def test_fused_featurize_hist_matches_native_per_checkset(spark, messy, checks):
     narrow, hist = featurize_and_token_histogram(messy, cfg)
     native = _native_clean_hist(messy, cfg)
     assert _collect(hist) == _collect(native)
-    narrow.unpersist()
+    # the returned frames are filters over the cached kernel output
+    spark.catalog.clearCache()
 
 
 def test_fused_narrow_frame_matches_native_featurize(spark, messy):
@@ -95,4 +113,4 @@ def test_fused_narrow_frame_matches_native_featurize(spark, messy):
     native = {r["doc_id"]: (r["tok_len"], r["tok_oob"]) for r in featurize(messy, cfg).collect()}
     assert fused == native
     assert fused["d6"] == (None, False)
-    narrow.unpersist()
+    spark.catalog.clearCache()

@@ -11,7 +11,7 @@ from htm_streamer_spark.config import EngineConfig
 from htm_streamer_spark.operators.referential import dim_sources_df, referential_violations
 from htm_streamer_spark.operators.stats import partition_stats
 from htm_streamer_spark.operators.uniqueness import duplicate_violations
-from htm_streamer_spark.plans.validation_plan import load_sequences
+from htm_streamer_spark.plans.validation_plan import load_sequences, run_validation_batch
 
 
 def _plan(df) -> str:
@@ -20,6 +20,20 @@ def _plan(df) -> str:
 
 def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _indent(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _ancestors(lines: list[str], i: int) -> list[str]:
+    """Node texts on the path from tree-string line ``i`` up to the root."""
+    depth, out = _indent(lines[i]), []
+    for line in reversed(lines[:i]):
+        if _indent(line) < depth:
+            depth = _indent(line)
+            out.append(line[depth:])
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -95,6 +109,32 @@ def test_exists_not_fullscan_of_other_columns(seq, cfg):
     plan = _plan(row_violations(seq, cfg))
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "ts" not in read_schema, read_schema
+
+
+def test_validation_suite_decodes_tokens_once(spark, seq, cfg):
+    """Every scan that reads the token arrays, in the executed plans of
+    all three suite outputs, feeds exactly one fused Arrow kernel
+    (MapInArrow), and no Python UDF node appears: a second token
+    decode path cannot come back unseen."""
+    res = run_validation_batch(spark, seq, cfg)
+    try:
+        for name in ("verdicts", "violations", "stats"):
+            frame = getattr(res, name)
+            frame.collect()  # let AQE finalize the plan
+            plan = _plan(frame)
+            assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+            lines = plan.splitlines()
+            scans = [
+                i
+                for i, line in enumerate(lines)
+                if "FileScan" in line and "tokens" in line.partition("ReadSchema:")[2]
+            ]
+            assert scans, (name, plan)
+            for i in scans:
+                kernels = [a for a in _ancestors(lines, i) if a.startswith("MapInArrow")]
+                assert len(kernels) == 1, (name, lines[i], plan)
+    finally:
+        res.unpersist()
 
 
 def test_wide_lsh_driver_query_uses_arrow_kernel(spark):

@@ -150,3 +150,22 @@ def test_empty_partition_gets_explicit_verdict_and_noop(spark, tiny_dir, cfg, tm
 
     r2 = run_incremental(spark, str(src), cat, cfg)
     assert r2["mode"] == "noop" and r2["validated"] == []
+
+
+def test_run_releases_cached_frames(spark, tiny_dir, cfg, catalog):
+    """A session that drains a table call by call must not keep every
+    past batch cached: one call leaves the persistent-RDD count as it
+    found it, in sampling mode and in running mode. (The session is
+    shared with other tests, so compare counts instead of asserting
+    none.)"""
+
+    def n_persistent() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    before = n_persistent()
+    r1 = run_incremental(spark, tiny_dir, catalog, cfg, max_partitions=4)
+    assert r1["mode"] == "sampling+initializing"
+    assert n_persistent() == before
+    r2 = run_incremental(spark, tiny_dir, catalog, cfg, max_partitions=2)
+    assert r2["mode"] == "running"
+    assert n_persistent() == before

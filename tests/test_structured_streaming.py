@@ -313,6 +313,8 @@ def test_sampling_mode_spans_micro_batches(spark, tiny_dir, cfg, tmp_path):
 
     cb = make_cb()
     store = CheckpointStore(catalog)
+    n_cached = spark.sparkContext._jsc.sc().getPersistentRDDs().size
+    cached_before = n_cached()
     # micro-batches of 2 partitions each; K = 4
     cb(full.filter(F.col("part_id").isin([0, 1])), 0)
     assert store.baseline(spark, cfg) is None  # still sampling
@@ -334,3 +336,5 @@ def test_sampling_mode_spans_micro_batches(spark, tiny_dir, cfg, tmp_path):
     cb(full.filter(F.col("part_id").isin([4, 5, 6, 7, 8, 9])), 2)
     v = store.verdicts(spark).toPandas()
     assert set(v["part_id"]) == set(range(10))
+    # no micro-batch leaves its validation frames cached
+    assert n_cached() == cached_before

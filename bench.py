@@ -315,6 +315,15 @@ def run_bench(spark, sf_dir: str, sf: str) -> dict:
     }
 
 
+def _driver_memory() -> str:
+    """A quarter of the host's physical memory, 2g to 48g. G1 grows the
+    heap toward its maximum, so a maximum above the host's memory (the
+    `get_spark` default of 48g on a 16 GB host) gets the JVM killed by
+    the kernel's OOM killer mid-run."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(2, min(48, phys // 4 // 2**30))}g"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = Path(sf_dir).name.replace("sf", "") or "0.1"
@@ -322,7 +331,12 @@ def main() -> None:
 
     from htm_streamer_spark.session import get_spark
 
-    spark = get_spark(app_name="bench", cores=cores, shuffle_partitions=max(cores, 16))
+    spark = get_spark(
+        app_name="bench",
+        cores=cores,
+        shuffle_partitions=max(cores, 16),
+        driver_memory=_driver_memory(),
+    )
     try:
         result = run_bench(spark, sf_dir, sf)
         result["cores"] = cores

@@ -10,8 +10,7 @@ once, driver-side, before any data is touched.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
@@ -93,14 +92,6 @@ class EngineConfig:
     # baseline before the engine leaves "sampling" mode.
     baseline_partitions: int = 4
 
-    # likelihood-parity params (reference defaults,
-    # anomalylikelihood.py:231 + config--model_default.yaml:8-10)
-    historic_window_size: int = 8640
-    reestimation_period: int = 100
-    averaging_window: int = 10
-
-    extra: dict[str, Any] = field(default_factory=dict)
-
 
 _TYPE_SPECS: dict[str, type | tuple[type, ...]] = {
     "vocab_size": int,
@@ -112,9 +103,6 @@ _TYPE_SPECS: dict[str, type | tuple[type, ...]] = {
     "n_salts": int,
     "checks": tuple,
     "baseline_partitions": int,
-    "historic_window_size": int,
-    "reestimation_period": int,
-    "averaging_window": int,
 }
 
 _KNOWN_CHECKS = {
@@ -205,13 +193,6 @@ def validate_config(cfg: EngineConfig) -> EngineConfig:
         raise ValueError("allowed_sources must be non-empty")
     if len(set(cfg.allowed_sources)) != len(cfg.allowed_sources):
         raise ValueError("allowed_sources contains duplicates")
-    # reference analog of learning > sampling (validation.py:169-177):
-    # re-estimation cadence must fit inside the historic window
-    if cfg.reestimation_period > cfg.historic_window_size:
-        raise ValueError(
-            "reestimation_period must be <= historic_window_size "
-            f"({cfg.reestimation_period} > {cfg.historic_window_size})"
-        )
     return cfg
 
 

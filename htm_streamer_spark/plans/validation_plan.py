@@ -34,7 +34,10 @@ from htm_streamer_spark.operators.invariants import (
     row_violations,
 )
 from htm_streamer_spark.operators.stats import partition_stats
-from htm_streamer_spark.operators.uniqueness import duplicate_violations
+from htm_streamer_spark.operators.uniqueness import (
+    duplicate_content_violations,
+    duplicate_violations,
+)
 
 
 @dataclass
@@ -119,29 +122,6 @@ def compute_baseline(
     return baseline
 
 
-def all_violations(
-    df: DataFrame, cfg: EngineConfig, featurized: bool = False
-) -> DataFrame:
-    """Union of row-level + uniqueness violation rows (referential is a
-    row-level ``isin`` check by default; see operators/referential.py
-    for the dimension-table broadcast form)."""
-    parts = [row_violations(df, cfg, featurized)]
-    if "dup_doc_id" in cfg.checks:
-        parts.append(duplicate_violations(df, cfg))
-    if "dup_content" in cfg.checks:
-        # opt-in (not in the default tuple): same token array under >=2
-        # distinct doc_ids — see operators/uniqueness.py
-        from htm_streamer_spark.operators.uniqueness import (
-            duplicate_content_violations,
-        )
-
-        parts.append(duplicate_content_violations(df, cfg))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def run_validation_batch(
     spark: SparkSession,
     df: DataFrame,
@@ -178,9 +158,18 @@ def run_validation_batch(
     else:
         base_parts = baseline.get("part_ids", [])
 
+    # violation rows: the row checks and dup_doc_id read the narrow
+    # frame; dup_content hashes the token arrays, so it reads the input.
+    # (referential is a row-level ``isin`` check by default; see
+    # operators/referential.py for the dimension-table broadcast form.)
+    viols = row_violations(narrow, cfg, featurized=True)
+    if "dup_doc_id" in cfg.checks:
+        viols = viols.unionByName(duplicate_violations(narrow, cfg))
+    if "dup_content" in cfg.checks:
+        viols = viols.unionByName(duplicate_content_violations(df, cfg))
     # violations are ~2% of rows — persist so the verdict count and the
     # returned violation rows share one computation
-    viols = all_violations(narrow, cfg, featurized=True).persist()
+    viols = viols.persist()
     n_viol = viols.groupBy("part_id").agg(F.count(F.lit(1)).alias("n_violations"))
     stats = partition_stats(narrow, cfg, featurized=True)
 

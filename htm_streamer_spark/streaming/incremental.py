@@ -11,7 +11,8 @@ partition not yet in the checkpoint — Structured Streaming's
 Lifecycle (reference's 3-mode state machine, config/config.py:199-225):
 
 - no committed baseline → *sampling/initializing*: fit + commit baseline
-  histograms from the first K clean partitions; those partitions get
+  histograms over the clean rows of the first K partitions that hold
+  rows (empty partition dirs are skipped); those partitions get
   verdict ``probation`` (flat 0.5, anomalylikelihood.py:440-442) unless
   they hold violations (hard-fail override, model/htm_model.py:385-388).
 - baseline committed → *running*: validate remaining partitions against
@@ -21,6 +22,12 @@ Crash-safety: violations + verdict rows for a batch publish in ONE
 atomic catalog commit, so a partition is either fully validated
 (status recorded + violations visible) or untouched — re-running never
 duplicates violation rows (SURVEY.md §7.3.4 idempotent resume).
+
+:class:`CheckpointStore` is the only writer of the engine-state tables:
+this module and the Structured Streaming binding (streaming/
+structured.py) both stage the baseline through
+:meth:`CheckpointStore.stage_baseline` and validate + commit a batch
+through :meth:`CheckpointStore.commit_batch`.
 """
 
 from __future__ import annotations
@@ -35,6 +42,7 @@ from pyspark.sql import functions as F
 from htm_streamer_spark.config import EngineConfig, validate_config
 from htm_streamer_spark.sources.table_io import list_hive_partitions
 from htm_streamer_spark.plans.validation_plan import (
+    baseline_part_ids,
     compute_baseline,
     load_sequences,
     run_validation_batch,
@@ -47,11 +55,14 @@ BASELINE_NTOK = "baseline_ntok"
 
 
 class CheckpointStore:
-    """Typed view over the catalog's engine-state tables.
+    """The catalog's engine-state tables (verdicts, violations and the
+    baseline histograms): their typed reads and their only writer.
 
     Schema mirrors FIXTURES.md §4: verdict rows carry
     ``(run_id, part_id, status, metrics-json, committed_at)`` — the
-    per-partition lineage + metrics the north rule requires.
+    per-partition lineage + metrics the north rule requires, with
+    ``committed_at`` the wall-clock write time. Every write goes through
+    ``catalog.stage_spark`` and ``catalog.commit``.
     """
 
     def __init__(self, catalog):
@@ -78,6 +89,61 @@ class CheckpointStore:
             return None
         part_ids = json.loads(self.catalog.prop("baseline_part_ids", "[]"))
         return {"tok": tok, "ntok": ntok, "part_ids": part_ids}
+
+    def stage_baseline(self, baseline: dict) -> dict:
+        """Stage the baseline histograms; returns the commit props that
+        record its partitions."""
+        self.catalog.stage_spark(BASELINE_TOK, baseline["tok"])
+        self.catalog.stage_spark(BASELINE_NTOK, baseline["ntok"])
+        return {"baseline_part_ids": json.dumps(baseline["part_ids"])}
+
+    def commit_batch(
+        self,
+        spark: SparkSession,
+        batch: DataFrame,
+        parts: list[int],
+        cfg: EngineConfig,
+        baseline: dict,
+        run_id: str,
+        props: dict,
+    ) -> int:
+        """Validate ``batch`` (the rows of partitions ``parts``) against
+        ``baseline`` and publish its violations and one verdict row per
+        partition, with ``props`` and anything staged before, in ONE
+        catalog commit. Returns the new catalog version."""
+        result = run_validation_batch(spark, batch, cfg, baseline=baseline)
+        try:
+            verdicts = result.verdicts
+            # listing-based discovery surfaces partition dirs with zero
+            # rows; without an explicit verdict they would re-enter todo
+            # on every run and the engine would never reach noop. Detect
+            # them with a column-pruned scan (hive column only — footer
+            # metadata, no token bytes) and commit status 'empty'.
+            nonempty = {r[0] for r in batch.select("part_id").distinct().collect()}
+            empty_parts = [p for p in parts if p not in nonempty]
+            if empty_parts:
+                verdicts = verdicts.unionByName(
+                    spark.createDataFrame(
+                        [(p, "empty", 0, 0.0, 0.0) for p in empty_parts],
+                        "part_id int, verdict string, n_violations long, psi double, kl double",
+                    )
+                )
+            violations = result.violations.withColumn("run_id", F.lit(run_id))
+            verdict_rows = verdicts.select(
+                F.lit(run_id).alias("run_id"),
+                "part_id",
+                F.col("verdict").alias("status"),
+                F.to_json(F.struct("n_violations", "psi", "kl")).alias("metrics"),
+                F.lit(time.time()).alias("committed_at"),
+            )
+            self.catalog.stage_spark(VIOLATIONS_TABLE, violations)
+            self.catalog.stage_spark(VERDICTS_TABLE, verdict_rows)
+            return self.catalog.commit(props)
+        finally:
+            # after the commit has written every staged frame: a session
+            # that drains a table batch by batch must not keep past
+            # batches cached
+            result.unpersist()
 
 
 def run_incremental(
@@ -120,14 +186,21 @@ def run_incremental(
         avail = sorted(r[0] for r in df.select("part_id").distinct().collect())
     todo = [p for p in avail if p not in done]
     baseline = store.baseline(spark, cfg)
+    # before the baseline commit: the baseline is fitted from the first
+    # K partitions that hold rows, as in a single-shot batch (the listing
+    # also yields empty partition dirs)
+    base_parts = (
+        baseline_part_ids(df.filter(F.col("part_id").isin(todo)), cfg)
+        if baseline is None and todo
+        else []
+    )
     if max_partitions is not None:
         limit = max_partitions
-        if baseline is None:
-            # before the baseline commit, a batch smaller than
-            # cfg.baseline_partitions would fit + freeze an undersized
-            # baseline and split runs would diverge from a single-shot
-            # run — clamp the first batch up to the baseline width
-            limit = max(limit, cfg.baseline_partitions)
+        if base_parts:
+            # a first batch that stops short of the last baseline
+            # partition would fit + freeze an undersized baseline and
+            # split runs would diverge from a single-shot run — clamp it
+            limit = max(limit, todo.index(base_parts[-1]) + 1)
         todo = todo[:limit]
     if not todo:
         return {"run_id": run_id, "validated": [], "mode": "noop"}
@@ -146,52 +219,12 @@ def run_incremental(
         batch = batch.repartition(repartition_width, F.col("doc_id"))
 
     mode = "running"
+    props = {}
     if baseline is None:
         mode = "sampling+initializing"
-        base_parts = todo[: cfg.baseline_partitions]
         baseline = compute_baseline(batch, cfg, base_parts)
-        checkpoint.stage_spark(BASELINE_TOK, baseline["tok"])
-        checkpoint.stage_spark(BASELINE_NTOK, baseline["ntok"])
-
-    result = run_validation_batch(spark, batch, cfg, baseline=baseline)
-    try:
-        verdicts = result.verdicts
-        # listing-based discovery surfaces partition dirs with zero rows;
-        # without an explicit verdict they would re-enter todo on every run
-        # and the engine would never reach noop. Detect them with a
-        # column-pruned scan (hive column only — footer metadata, no token
-        # bytes) and commit status 'empty'.
-        nonempty = {r[0] for r in batch.select("part_id").distinct().collect()}
-        empty_parts = [p for p in todo if p not in nonempty]
-        if empty_parts:
-            verdicts = verdicts.unionByName(
-                spark.createDataFrame(
-                    [(p, "empty", 0, 0.0, 0.0) for p in empty_parts],
-                    "part_id int, verdict string, n_violations long, psi double, kl double",
-                )
-            )
-
-        now = time.time()
-        verdict_rows = verdicts.select(
-            F.lit(run_id).alias("run_id"),
-            "part_id",
-            F.col("verdict").alias("status"),
-            F.to_json(
-                F.struct("n_violations", "psi", "kl")
-            ).alias("metrics"),
-            F.lit(now).alias("committed_at"),
-        )
-        checkpoint.stage_spark(VIOLATIONS_TABLE, result.violations.withColumn("run_id", F.lit(run_id)))
-        checkpoint.stage_spark(VERDICTS_TABLE, verdict_rows)
-        props = {}
-        if mode != "running":
-            props["baseline_part_ids"] = json.dumps(baseline["part_ids"])
-        version = checkpoint.commit(props)
-    finally:
-        # after the commit has written every staged frame: a session
-        # that drains a table call by call must not keep past batches
-        # cached
-        result.unpersist()
+        props = store.stage_baseline(baseline)
+    version = store.commit_batch(spark, batch, todo, cfg, baseline, run_id, props)
     return {
         "run_id": run_id,
         "validated": todo,
@@ -234,11 +267,7 @@ def refresh_baseline(
         from_partitions = sorted(r[0] for r in ok)
         if not from_partitions:
             raise RuntimeError("no non-fail partitions available for re-estimation")
-    from htm_streamer_spark.plans.validation_plan import compute_baseline
-
     df = load_sequences(spark, table_path).filter(F.col("part_id").isin(from_partitions))
     base = compute_baseline(df, cfg, from_partitions)
-    checkpoint.stage_spark(BASELINE_TOK, base["tok"])
-    checkpoint.stage_spark(BASELINE_NTOK, base["ntok"])
-    version = checkpoint.commit({"baseline_part_ids": json.dumps(from_partitions)})
+    version = checkpoint.commit(store.stage_baseline(base))
     return {"baseline_part_ids": from_partitions, "snapshot_version": version}

@@ -24,10 +24,11 @@ completion:
    filesystem listing the batch engine uses for discovery;
 3. when a partition's seen set covers its listed set, the partition is
    validated by a partition-pruned batch re-read through the SAME
-   ``run_validation_batch`` plan as the incremental engine — so its
-   verdict, violations (including the cross-file duplicate check) and
-   baseline contribution are byte-equal to a single-batch run, and each
-   partition gets EXACTLY ONE verdict row.
+   validate-and-commit step as the incremental engine
+   (``CheckpointStore.commit_batch``) — so its verdict, violations
+   (including the cross-file duplicate check) and baseline contribution
+   are byte-equal to a single-batch run, and each partition gets
+   EXACTLY ONE verdict row.
 
 Each partition's token bytes are therefore read once total (the
 bookkeeping scan reads only footers + the hive column).
@@ -38,8 +39,8 @@ Row-shaped analogs of the reference's stream-mode behaviors:
 - learning cutoff = baseline frozen after first commit (ST6);
 - sampling mode spans micro-batches (ST2): pre-baseline complete
   partitions get probation verdicts; the baseline commits only once
-  ``cfg.baseline_partitions`` partitions are COMPLETE, fitted from the
-  first K by part_id — identical to the single-batch fit.
+  ``cfg.baseline_partitions`` partitions with rows are COMPLETE, fitted
+  from the first K by part_id — identical to the single-batch fit.
 
 The epoch replay guard is keyed on the checkpoint identity: epoch ids
 are monotone only per checkpoint location, so a restart against a NEW
@@ -58,20 +59,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from htm_streamer_spark.config import SEQUENCES_SCHEMA, EngineConfig
-from htm_streamer_spark.plans.validation_plan import (
-    compute_baseline,
-    load_sequences,
-    run_validation_batch,
-)
+from htm_streamer_spark.plans.validation_plan import compute_baseline, load_sequences
 from htm_streamer_spark.sources.table_io import list_hive_partition_files
-from htm_streamer_spark.streaming.incremental import (
-    BASELINE_NTOK,
-    BASELINE_TOK,
-    VERDICTS_TABLE,
-    VIOLATIONS_TABLE,
-    CheckpointStore,
-    run_incremental,
-)
+from htm_streamer_spark.streaming.incremental import CheckpointStore, run_incremental
 
 
 def read_sequences_stream(
@@ -177,62 +167,34 @@ def validate_stream(
         baseline = store.baseline(spark, cfg)
         if baseline is None:
             # SAMPLING MODE ACROSS MICRO-BATCHES (ST2): freeze the
-            # baseline only once K partitions are complete, fitted from
-            # the first K by part_id — identical to a single batch run
-            # over those partitions. Until then every complete
+            # baseline only once K partitions with rows are complete,
+            # fitted from the first K by part_id — identical to a single
+            # batch run over those partitions. Until then every complete
             # partition is probation (the reference's sampling-phase
             # flat 0.5), via an empty-histogram baseline whose part_ids
             # mark them all as baseline members.
             pending = sorted(
                 set(json.loads(catalog.prop("pending_baseline_parts", "[]")))
-                | set(complete)
+                # only partitions the stream delivered rows from: an
+                # empty partition dir completes at once but has no rows
+                | {p for p in complete if str(p) in seen}
             )
             if len(pending) >= cfg.baseline_partitions:
                 base_parts = pending[: cfg.baseline_partitions]
                 baseline = compute_baseline(
                     full.filter(F.col("part_id").isin(base_parts)), cfg, base_parts
                 )
-                catalog.stage_spark(BASELINE_TOK, baseline["tok"])
-                catalog.stage_spark(BASELINE_NTOK, baseline["ntok"])
-                props["baseline_part_ids"] = json.dumps(base_parts)
+                props.update(store.stage_baseline(baseline))
                 props["pending_baseline_parts"] = "[]"
             else:
                 props["pending_baseline_parts"] = json.dumps(pending)
                 empty_hist = spark.createDataFrame([], "bucket int, cnt long")
                 baseline = {"tok": empty_hist, "ntok": empty_hist, "part_ids": complete}
 
-        run_id = f"stream-epoch-{epoch_id}"
         batch = full.filter(F.col("part_id").isin(complete))
-        result = run_validation_batch(spark, batch, cfg, baseline=baseline)
-        try:
-            verdicts = result.verdicts
-            nonempty = {r[0] for r in batch.select("part_id").distinct().collect()}
-            empty_parts = [p for p in complete if p not in nonempty]
-            if empty_parts:
-                verdicts = verdicts.unionByName(
-                    spark.createDataFrame(
-                        [(p, "empty", 0, 0.0, 0.0) for p in empty_parts],
-                        "part_id int, verdict string, n_violations long, psi double, kl double",
-                    )
-                )
-            catalog.stage_spark(
-                VIOLATIONS_TABLE, result.violations.withColumn("run_id", F.lit(run_id))
-            )
-            catalog.stage_spark(
-                VERDICTS_TABLE,
-                verdicts.select(
-                    F.lit(run_id).alias("run_id"),
-                    "part_id",
-                    F.col("verdict").alias("status"),
-                    F.to_json(F.struct("n_violations", "psi", "kl")).alias("metrics"),
-                    F.lit(float(epoch_id)).alias("committed_at"),
-                ),
-            )
-            catalog.commit(props)
-        finally:
-            # after the commit: a long-running query must not keep
-            # every past batch cached
-            result.unpersist()
+        store.commit_batch(
+            spark, batch, complete, cfg, baseline, f"stream-epoch-{epoch_id}", props
+        )
 
     stream = read_sequences_stream(spark, path, max_files_per_trigger)
     writer = stream.writeStream.foreachBatch(process_batch).outputMode("update")

@@ -39,6 +39,19 @@ def clean_dir(tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
+def clean_gap_dir(clean_dir, tmp_path_factory):
+    """The clean table with partition 1 emptied: its directory stays and
+    holds no data files, so a listing still yields it."""
+    import shutil
+
+    out = tmp_path_factory.mktemp("data") / "sequences_clean_gap"
+    shutil.copytree(clean_dir, out)
+    shutil.rmtree(out / "part_id=1")
+    (out / "part_id=1").mkdir()
+    return str(out)
+
+
+@pytest.fixture(scope="session")
 def tiny_pandas() -> pd.DataFrame:
     """The same tiny table as a pandas frame (oracle input)."""
     cols = generate_sequences(**TINY)

@@ -32,7 +32,6 @@ def test_type_error():
         dict(checks=("not_a_check",)),
         dict(allowed_sources=()),
         dict(allowed_sources=("web", "web")),
-        dict(reestimation_period=10_000_000),
     ],
 )
 def test_range_errors(kw):

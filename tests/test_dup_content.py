@@ -9,7 +9,7 @@ import pytest
 
 from htm_streamer_spark.config import SEQUENCES_SCHEMA, EngineConfig
 from htm_streamer_spark.operators.uniqueness import duplicate_content_violations
-from htm_streamer_spark.plans.validation_plan import all_violations
+from htm_streamer_spark.plans.validation_plan import run_validation_batch
 
 
 @pytest.fixture(scope="module")
@@ -47,10 +47,10 @@ def test_same_id_repeats_are_not_content_dups(spark, seqs):
 def test_opt_in_via_checks_tuple(spark, seqs):
     base = EngineConfig()
     assert "dup_content" not in base.checks  # off by default
-    default_rows = all_violations(seqs, base).toPandas()
+    default_rows = run_validation_batch(spark, seqs, base).violations.toPandas()
     assert "dup_content" not in set(default_rows["check_id"])
     on = EngineConfig(checks=base.checks + ("dup_content",))
-    rows_on = all_violations(seqs, on).toPandas()
+    rows_on = run_validation_batch(spark, seqs, on).violations.toPandas()
     dup_rows = rows_on[rows_on["check_id"] == "dup_content"]
     assert sorted(dup_rows["doc_id"]) == ["a1", "a2", "a3"]
     # everything else unchanged

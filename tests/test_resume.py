@@ -169,3 +169,31 @@ def test_run_releases_cached_frames(spark, tiny_dir, cfg, catalog):
     r2 = run_incremental(spark, tiny_dir, catalog, cfg, max_partitions=2)
     assert r2["mode"] == "running"
     assert n_persistent() == before
+
+
+def test_empty_early_partition_does_not_shift_baseline(spark, clean_gap_dir, cfg, tmp_path):
+    """The baseline is the first K partitions that hold rows, as in a
+    single-shot batch: an empty partition dir among the first K must not
+    take a baseline slot, in a single-shot run or in a split one."""
+    import json
+
+    from htm_streamer_spark.plans.validation_plan import load_sequences, run_validation_batch
+
+    res = run_validation_batch(spark, load_sequences(spark, clean_gap_dir), cfg)
+    want = res.verdicts.toPandas().set_index("part_id").sort_index()
+    res.unpersist()
+    assert want.loc[[0, 2, 3, 4], "verdict"].tolist() == ["probation"] * 4
+
+    for name, first_batch in (("single", None), ("split", 2)):
+        cat = ManifestCatalog(tmp_path / name)
+        run_incremental(spark, clean_gap_dir, cat, cfg, max_partitions=first_batch)
+        run_incremental(spark, clean_gap_dir, cat, cfg)
+        assert CheckpointStore(cat).baseline(spark, cfg)["part_ids"] == [0, 2, 3, 4]
+        got = _verdicts_pdf(spark, cat).set_index("part_id")
+        assert got.loc[1, "status"] == "empty"
+        got = got.drop(index=1)
+        assert got["status"].tolist() == want["verdict"].tolist()
+        metrics = pd.DataFrame(got["metrics"].map(json.loads).tolist(), index=got.index)
+        assert metrics["n_violations"].tolist() == want["n_violations"].tolist()
+        for col in ("psi", "kl"):
+            assert metrics[col].tolist() == pytest.approx(want[col].tolist())

@@ -3,6 +3,8 @@ same verdicts as the batch engine."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from htm_streamer_spark.config import EngineConfig
@@ -14,6 +16,7 @@ from htm_streamer_spark.streaming.structured import validate_stream
 @pytest.mark.slow
 def test_stream_available_now_validates_all(spark, tiny_dir, cfg, tmp_path):
     catalog = ManifestCatalog(tmp_path / "stream_ckpt")
+    started = time.time()
     q = validate_stream(
         spark,
         tiny_dir,
@@ -23,10 +26,13 @@ def test_stream_available_now_validates_all(spark, tiny_dir, cfg, tmp_path):
         available_now=True,
     )
     q.awaitTermination(300)
+    finished = time.time()
     store = CheckpointStore(catalog)
     verdicts = store.verdicts(spark).toPandas()
     # every partition got EXACTLY ONE verdict row
     assert sorted(verdicts["part_id"]) == list(range(10))
+    # committed_at is the write time (FIXTURES.md §4), not the epoch id
+    assert verdicts["committed_at"].between(started, finished).all()
     viol = store.violations(spark)
     assert viol.count() > 0
 
@@ -338,3 +344,32 @@ def test_sampling_mode_spans_micro_batches(spark, tiny_dir, cfg, tmp_path):
     assert set(v["part_id"]) == set(range(10))
     # no micro-batch leaves its validation frames cached
     assert n_cached() == cached_before
+
+
+@pytest.mark.slow
+def test_stream_empty_early_partition_does_not_shift_baseline(spark, clean_gap_dir, cfg, tmp_path):
+    """An empty partition dir completes in the first micro-batch but has
+    no rows: it gets an 'empty' verdict and no baseline slot, so the
+    stream fits the same baseline as a single-shot batch run."""
+    from htm_streamer_spark.streaming.incremental import run_incremental
+
+    catalog = ManifestCatalog(tmp_path / "gap_ckpt")
+    q = validate_stream(
+        spark,
+        clean_gap_dir,
+        catalog,
+        cfg,
+        checkpoint_location=str(tmp_path / "gap_spark_ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(300)
+    ref_catalog = ManifestCatalog(tmp_path / "gap_ref")
+    run_incremental(spark, clean_gap_dir, ref_catalog, cfg)
+
+    store, ref_store = CheckpointStore(catalog), CheckpointStore(ref_catalog)
+    assert store.baseline(spark, cfg)["part_ids"] == [0, 2, 3, 4]
+    assert ref_store.baseline(spark, cfg)["part_ids"] == [0, 2, 3, 4]
+    cols = ["part_id", "status", "metrics"]
+    got = store.verdicts(spark).toPandas()[cols].sort_values("part_id")
+    want = ref_store.verdicts(spark).toPandas()[cols].sort_values("part_id")
+    assert got.values.tolist() == want.values.tolist()
